@@ -51,10 +51,9 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     path = _manifest_dir(out_dir)
     if not os.path.exists(path):
         return None
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return None
+    # a ledger that exists but cannot be read raises: read as "nothing
+    # committed" it would re-run every bucket and append duplicate rows
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:

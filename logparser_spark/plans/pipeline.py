@@ -7,7 +7,8 @@ Lifecycle (SURVEY §3.4) — one Spark application, shuffles annotated::
          → merge templates (driver, KBs)            collect (tiny)
          → assign (broadcast tree, Arrow batches)   no shuffle
          → enrich (broadcast joins)                 no shuffle
-         → route  (partitionBy fan-out write)       shuffle #2 (write-side)
+         → route  (partitionBy fan-out write)       shuffle #2: AQE
+                                                     REBALANCE(ckpt_bucket, sink_id)
          → aggregate (two-stage salted counts)      shuffles #3a/#3b
 
 Resume: committed ckpt_buckets are skipped; the frozen template set is
@@ -29,7 +30,7 @@ from logparser_spark.operators.aggregate import sink_window_counts, turn_window_
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.enrich import enrich
 from logparser_spark.operators.mine import mine_templates
-from logparser_spark.operators.route import with_sink_id
+from logparser_spark.operators.route import rebalance_by_sink, with_sink_id
 from logparser_spark.plans import manifest as M
 
 
@@ -122,22 +123,14 @@ def run_pipeline(
     assigned = assign_templates(pending, clusters, cfg.drain, strategy=strategy)
     enriched = enrich(assigned, lkp_role, lkp_tool)
     routed = with_sink_id(enriched, cfg)
-    if "masked" in routed.columns:  # derived column — not persisted
-        routed = routed.drop("masked")
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # third key de-skews within (bucket, sink): a dominant conversation
-    # must not serialize one write task (same guard as route_write)
-    sub_buckets = max(cfg.num_partitions // 8, 1)
+    # dynamic overwrite as a write option, not a session conf: it replaces
+    # only the buckets this run writes (a half-written one from a dead run
+    # included) and leaves the caller's session untouched
     (
-        routed.repartition(
-            cfg.num_partitions,
-            F.col("ckpt_bucket"),
-            F.col("sink_id"),
-            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(sub_buckets)),
-        )
+        rebalance_by_sink(routed, cfg, extra_keys=("ckpt_bucket",))
         .write.format(cfg.sink_format)
         .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ckpt_bucket", "sink_id")
         .save(routed_path)
     )

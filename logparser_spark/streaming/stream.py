@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from logparser_spark.config import PipelineConfig
 from logparser_spark.drain import Cluster
 from logparser_spark.operators.assign import assign_templates
-from logparser_spark.operators.route import with_sink_id
+from logparser_spark.operators.route import rebalance_by_sink, with_sink_id
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -174,29 +174,18 @@ def streaming_route_write(
     continuous one-pass fan-out of routed rows into per-sink parquet
     directories.
 
-    Same plan shape as the batch writer: rows cluster by
-    ``(sink_id, hash(conv_id, turn_idx) sub-bucket)`` before the
-    partitioned sink, so each micro-batch task writes ~1 sink directory
-    (files per trigger scale with tasks, not tasks × sinks) and a
-    dominant conversation cannot pin one write task.  The
+    Same pre-write exchange as the batch writer
+    (``operators.route.rebalance_by_sink``): each stateless micro-batch
+    plans an ``AdaptiveSparkPlan`` over ``REBALANCE(sink_id)``, so each
+    task writes ~1 sink directory (files per trigger scale with tasks, not
+    tasks × sinks) and AQE splits a dominant sink across tasks.  The
     ``checkpointLocation`` gives exactly-once parquet appends per
     micro-batch; restarting from the same checkpoint skips committed
     batches — the streaming analog of the batch resume ledger.
     """
     cfg = cfg or PipelineConfig()
-    df = routed
-    if "sink_id" not in df.columns:
-        df = with_sink_id(df, cfg)
-    if "masked" in df.columns:
-        df = df.drop("masked")
-    sub_buckets = max(cfg.num_partitions // 8, 1)
-    clustered = df.repartition(
-        cfg.num_partitions,
-        F.col("sink_id"),
-        F.pmod(F.hash("conv_id", "turn_idx"), F.lit(sub_buckets)),
-    )
     writer = (
-        clustered.writeStream.outputMode("append")
+        rebalance_by_sink(routed, cfg).writeStream.outputMode("append")
         .format(cfg.sink_format)
         .partitionBy("sink_id")
         .option("path", path)

@@ -7,6 +7,8 @@ broadcast, aggregation is partial+final, and assignment adds no shuffle.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -171,25 +173,53 @@ def test_curation_narrow_ops_add_no_exchange(spark):
         assert "Python" not in plan
 
 
-def test_route_write_plan_uses_rebalance(spark):
-    """route_rebalance=True must plan a rebalance exchange (AQE splits
-    oversized sinks / coalesces small ones at runtime), not a fixed
-    round-robin or user-pinned hash repartition."""
-    from logparser_spark.config import PipelineConfig
-    from logparser_spark.operators.enrich import enrich as _enrich
-    from logparser_spark.operators.route import with_sink_id
+def test_route_write_plan_uses_rebalance(spark, tmp_path, monkeypatch):
+    """The resumable job's pre-write exchange, captured as ``run_pipeline``
+    builds it: REBALANCE on (ckpt_bucket, sink_id), so AQE splits an
+    oversized sink and coalesces small ones at runtime.  Without AQE the
+    hint would silently be a plain hash, so the helper refuses to build."""
+    import logparser_spark.plans.pipeline as P
+    from logparser_spark.operators.route import rebalance_by_sink
     from logparser_spark.sources.transcripts import transcripts_df
 
-    cfg = PipelineConfig(num_partitions=8)
-    tdf = transcripts_df(spark, 2000, 20, 0)
-    routed = with_sink_id(
-        tdf.withColumn("event_id", F.lit("e")).withColumn("matched", F.lit(True)),
-        cfg,
-    )
-    # the pre-write exchange as route_write builds it
-    clustered = routed.hint("rebalance", "sink_id")
+    seen = []
+
+    def spy(df, *args, **kwargs):
+        seen.append(rebalance_by_sink(df, *args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(P, "rebalance_by_sink", spy)
+    cfg = PipelineConfig(num_partitions=4, checkpoint_buckets=2)
+    P.run_pipeline(spark, transcripts_df(spark, 400, 4, 0), str(tmp_path), cfg)
+    (clustered,) = seen
     logical = clustered._jdf.queryExecution().analyzed().toString()
-    assert "RebalancePartitions" in logical
+    assert re.search(r"RebalancePartitions \[ckpt_bucket#\d+, sink_id#\d+\]", logical), logical
+    assert "masked" not in clustered.columns
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match="adaptive"):
+            rebalance_by_sink(clustered, cfg)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_streaming_route_write_plan_uses_rebalance(spark, tmp_path):
+    """A started ``streaming_route_write`` micro-batch plans the batch
+    writer's exchange: AQE re-plans it (``AQEShuffleRead``) over
+    REBALANCE(sink_id), not a fixed hash."""
+    from logparser_spark.sources.transcripts import transcripts_df
+    from logparser_spark.streaming.stream import TRANSCRIPT_SCHEMA, streaming_route_write
+
+    inp = str(tmp_path / "in")
+    transcripts_df(spark, 400, 4, 0).write.parquet(inp)
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(inp)
+    q = streaming_route_write(stream.withColumn("sink_id", F.col("role")),
+                              str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    plan = q._jsq.explainInternal(False)
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
+    assert "AQEShuffleRead" in plan, plan
 
 
 def test_grouped_percentiles_preaggregates_before_window(spark):
