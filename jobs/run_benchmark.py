@@ -5,7 +5,7 @@
     spark-submit --master 'local[8]' --py-files dist/logparser_spark.zip \\
         jobs/run_benchmark.py --dataset HDFS --log-file /path/HDFS_2k.log \\
         [--ground-truth /path/HDFS_2k.log_structured.csv] \\
-        [--out /tmp/bench_out] [--strategy drain|spell|iplom]
+        [--out /tmp/bench_out] [--strategy <engine>]
 
 Prints one JSON line per dataset: line/template counts plus pair-counting
 accuracy metrics when a ground truth is supplied; optionally writes the
@@ -19,6 +19,8 @@ import json
 
 
 def main() -> None:
+    from logparser_spark.operators.engines import ENGINES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--dataset", action="append", required=True,
                     help="dataset name from BENCHMARK_SETTINGS (repeatable)")
@@ -28,9 +30,7 @@ def main() -> None:
                     help="loghub structured CSV with LineId,EventId (repeatable; "
                          "'' to skip a position)")
     ap.add_argument("--out", help="also write <name>_structured/_templates.csv here")
-    ap.add_argument("--strategy", default="drain",
-                    choices=["drain", "spell", "iplom", "lenma", "ael",
-                             "logmine", "shiso", "lke", "logsig", "molfi"])
+    ap.add_argument("--strategy", default="drain", choices=list(ENGINES))
     ap.add_argument("--logsig-k", type=int, default=0,
                     help="event count k for --strategy logsig (required there)")
     ap.add_argument("--num-partitions", type=int, default=0)

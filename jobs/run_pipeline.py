@@ -22,6 +22,8 @@ import os
 
 
 def main() -> None:
+    from logparser_spark.operators.engines import ENGINES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="input transcripts table path (parquet/iceberg)")
     ap.add_argument("--synthetic-turns", type=int, default=0,
@@ -30,9 +32,10 @@ def main() -> None:
     ap.add_argument("--mine-sample-one-in", type=int, default=1)
     ap.add_argument("--num-partitions", type=int, default=0)
     ap.add_argument("--checkpoint-buckets", type=int, default=0)
+    # every engine but LogSig, which needs its event count k (see
+    # run_benchmark.py --logsig-k)
     ap.add_argument("--strategy", default="drain",
-                    choices=["drain", "spell", "iplom", "lenma", "ael",
-                             "logmine", "shiso", "lke", "molfi"])
+                    choices=[e for e in ENGINES if e != "logsig"])
     ap.add_argument("--stream", action="store_true",
                     help="continuous-ingest mode: mine templates from a batch "
                          "read of --input, then run the streaming "
@@ -91,7 +94,8 @@ def main() -> None:
             strategy=args.strategy,
         )
         routed = streaming_assign(
-            read_transcript_stream(spark, args.input), clusters, cfg
+            read_transcript_stream(spark, args.input), clusters, cfg,
+            strategy=args.strategy,
         )
         q_route = streaming_route_write(
             routed, f"{args.out}/routed", f"{args.out}/_ckpt/route", cfg

@@ -17,7 +17,7 @@ extraction compiles one regex per template (reference
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
 import numpy as np
 import pandas as pd
@@ -32,6 +32,7 @@ from logparser_spark.drain import (
     event_id_of,
     template_to_param_regex,
 )
+from logparser_spark.operators.engines import engine
 from logparser_spark.operators.mine import with_masked
 
 ASSIGN_FIELDS = [
@@ -169,167 +170,134 @@ class _Matcher(_BaseMatcher):
         return results  # type: ignore[return-value]
 
 
-class _SpellMatcher(_BaseMatcher):
-    """Read-only LCS matcher over a fixed Spell template set (memoized
-    per unique text; LCS decision rule of :mod:`logparser_spark.spell`)."""
+class _ScanMatcher(_BaseMatcher):
+    """Read-only per-text matcher for the engines without a vectorized
+    rule (Spell, LenMa, SHISO, LogMine, LogSig): each unique text goes
+    through the engine's ``best(tokens) -> template | None`` (memoized
+    per unique text by ``_match_batch``)."""
 
-    def __init__(self, templates: list[str], tau: float, with_params: bool):
+    def __init__(self, templates: list[str], best, with_params: bool):
         super().__init__(templates, with_params)
-        from logparser_spark.spell import SpellCluster, SpellMap, SpellParams
-
-        self.smap = SpellMap(SpellParams(tau))
-        for t in templates:
-            self.smap.clusters.append(
-                SpellCluster(tokens=t.split(" ") if t else [""])
-            )
+        self.best = best
 
     def match_unique(self, uniques: np.ndarray) -> list[tuple[str, str, bool]]:
         out = []
         for u in uniques:
-            hit = self.smap.search(u.split() or [""])
-            if hit is not None:
-                out.append((hit.template, event_id_of(hit.template), True))
+            tpl = self.best(u.split() or [""])
+            if tpl is not None:
+                out.append((tpl, event_id_of(tpl), True))
             else:
                 out.append((u, event_id_of(u), u in self.template_set))
         return out
 
 
-class _LenMaMatcher(_BaseMatcher):
-    """Read-only length-vector matcher over a fixed LenMa template set
-    (memoized per unique text; cosine decision rule of
-    :mod:`logparser_spark.lenma`)."""
-
-    def __init__(self, templates: list[str], params, with_params: bool):
-        super().__init__(templates, with_params)
-        from logparser_spark.lenma import LenMaCluster, LenMaMap
-
-        self.lmap = LenMaMap(params)
-        for t in templates:
-            toks = t.split(" ") if t else [""]
-            self.lmap.clusters.append(
-                LenMaCluster(tokens=toks, lengths=[len(x) for x in toks])
-            )
-
-    def match_unique(self, uniques: np.ndarray) -> list[tuple[str, str, bool]]:
-        out = []
-        for u in uniques:
-            hit = self.lmap.search(u.split() or [""])
-            if hit is not None:
-                out.append((hit.template, event_id_of(hit.template), True))
-            else:
-                out.append((u, event_id_of(u), u in self.template_set))
-        return out
+def _tokens(template: str) -> list[str]:
+    return template.split(" ") if template else [""]
 
 
-class _ShisoMatcher(_BaseMatcher):
-    """Read-only SHISO matcher: the mining DISTANCE RULE applied against
-    the final template list (min mean word distance ≤ threshold; ties to
-    the lexicographically-smallest template).  The capacity tree only
-    accelerates online mining — a read-only walk can diverge from a
-    text's true cluster branch (texts differ from their templates at
-    parameter positions), while the flat rule is exact and memoized per
-    unique text over a small template list."""
+def _search_best(kmap):
+    """``best`` of an online map's read-only ``search``."""
 
-    def __init__(self, templates: list[str], params, with_params: bool):
-        super().__init__(templates, with_params)
-        from logparser_spark.shiso import ShisoParams
+    def best(toks: list[str]) -> str | None:
+        hit = kmap.search(toks)
+        return None if hit is None else hit.template
 
-        self.params = params or ShisoParams()
-        self.tpl_tokens = [(t.split(" ") if t else [""], t) for t in templates]
-
-    def match_unique(self, uniques: np.ndarray) -> list[tuple[str, str, bool]]:
-        from logparser_spark.shiso import log_dist
-
-        floor = self.params.mismatch_floor
-        out = []
-        for u in uniques:
-            toks = u.split() or [""]
-            best, best_d = None, None
-            for tpl_toks, tpl in self.tpl_tokens:  # sorted → tie = smallest
-                d = log_dist(tpl_toks, toks, floor)
-                if best_d is None or d < best_d:
-                    best, best_d = tpl, d
-            if best is not None and best_d <= self.params.threshold:
-                out.append((best, event_id_of(best), True))
-            else:
-                out.append((u, event_id_of(u), u in self.template_set))
-        return out
+    return best
 
 
-class _LogSigMatcher(_BaseMatcher):
-    """Read-only LogSig matcher: signatures are majority-term sequences,
-    so a text matches the signature whose terms form an ordered
-    subsequence of its tokens, most terms first; texts containing no
-    full signature (minority group members whose group signature carries
-    another member's terms) fall back to maximum term overlap.  Both
-    rules tie to the lexicographically-smallest signature."""
+def _nearest_best(templates: list[str], dist, threshold: float):
+    """``best`` = the template at the least ``dist(template, text)``,
+    accepted at or under ``threshold``; ties go to the earliest, i.e.
+    the lexicographically-smallest, template (templates arrive sorted)."""
+    tpls = [(_tokens(t), t) for t in templates]
 
-    def __init__(self, templates: list[str], with_params: bool):
-        super().__init__(templates, with_params)
-        self.sigs = [
-            (t.split(" ") if t else [""], set(t.split(" ") if t else [""]), t)
-            for t in templates
-        ]
+    def best(toks: list[str]) -> str | None:
+        d, tpl = min(
+            ((dist(tt, toks), t) for tt, t in tpls),
+            key=lambda dt: dt[0],
+            default=(math.inf, None),
+        )
+        return tpl if d <= threshold else None
 
-    @staticmethod
-    def _is_subseq(sig: list[str], toks: list[str]) -> bool:
+    return best
+
+
+def _spell_matcher(templates: list[str], params, with_params: bool) -> _ScanMatcher:
+    """The LCS decision rule of :mod:`logparser_spark.spell`."""
+    from logparser_spark.spell import SpellCluster, SpellMap
+
+    smap = SpellMap(params)
+    smap.clusters = [SpellCluster(tokens=_tokens(t)) for t in templates]
+    return _ScanMatcher(templates, _search_best(smap), with_params)
+
+
+def _lenma_matcher(templates: list[str], params, with_params: bool) -> _ScanMatcher:
+    """The length-vector cosine rule of :mod:`logparser_spark.lenma`."""
+    from logparser_spark.lenma import LenMaCluster, LenMaMap
+
+    lmap = LenMaMap(params)
+    lmap.clusters = [
+        LenMaCluster(tokens=_tokens(t), lengths=[len(x) for x in _tokens(t)])
+        for t in templates
+    ]
+    return _ScanMatcher(templates, _search_best(lmap), with_params)
+
+
+def _shiso_matcher(templates: list[str], params, with_params: bool) -> _ScanMatcher:
+    """The SHISO mining distance rule applied against the final template
+    list.  The capacity tree only accelerates online mining — a read-only
+    walk can diverge from a text's true cluster branch (texts differ from
+    their templates at parameter positions), while the flat rule is
+    exact."""
+    from logparser_spark.shiso import log_dist
+
+    def dist(tpl: list[str], toks: list[str]) -> float:
+        return log_dist(tpl, toks, params.mismatch_floor)
+
+    return _ScanMatcher(
+        templates, _nearest_best(templates, dist, params.threshold), with_params
+    )
+
+
+def _logmine_matcher(templates: list[str], params, with_params: bool) -> _ScanMatcher:
+    """The LogMine distance applied template-vs-text (wildcards match
+    anything), within ``max_dist``."""
+    from logparser_spark.logmine import logmine_dist
+
+    return _ScanMatcher(
+        templates, _nearest_best(templates, logmine_dist, params.max_dist), with_params
+    )
+
+
+def _logsig_matcher(templates: list[str], params, with_params: bool) -> _ScanMatcher:
+    """LogSig signatures are majority-term sequences, so a text matches
+    the signature whose terms form an ordered subsequence of its tokens,
+    most terms first; texts containing no full signature (minority group
+    members whose group signature carries another member's terms) fall
+    back to maximum term overlap.  Both rules tie to the
+    lexicographically-smallest signature."""
+    sigs = [(_tokens(t), set(_tokens(t)), t) for t in templates]
+
+    def is_subseq(sig: list[str], toks: list[str]) -> bool:
         it = iter(toks)
         return all(s in it for s in sig)
 
-    def match_unique(self, uniques: np.ndarray) -> list[tuple[str, str, bool]]:
-        out = []
-        for u in uniques:
-            toks = u.split() or [""]
-            tok_set = set(toks)
-            best, best_n = None, -1
-            for sig, sig_set, tpl in self.sigs:
-                if len(sig) > best_n and sig_set <= tok_set and self._is_subseq(sig, toks):
-                    best, best_n = tpl, len(sig)
-            if best is None:
-                for sig, sig_set, tpl in self.sigs:
-                    n = len(sig_set & tok_set)
-                    if n > best_n:
-                        best, best_n = tpl, n
-                if best_n <= 0:
-                    best = None
-            if best is not None:
-                out.append((best, event_id_of(best), True))
-            else:
-                out.append((u, event_id_of(u), u in self.template_set))
-        return out
+    def best(toks: list[str]) -> str | None:
+        tok_set = set(toks)
+        hit, hit_n = None, -1
+        for sig, sig_set, tpl in sigs:
+            if len(sig) > hit_n and sig_set <= tok_set and is_subseq(sig, toks):
+                hit, hit_n = tpl, len(sig)
+        if hit is None:
+            for sig, sig_set, tpl in sigs:
+                n = len(sig_set & tok_set)
+                if n > hit_n:
+                    hit, hit_n = tpl, n
+            if hit_n <= 0:
+                hit = None
+        return hit
 
-
-class _LogMineMatcher(_BaseMatcher):
-    """Read-only LogMine matcher: the mining distance applied
-    template-vs-text (wildcards match anything); the most-similar pattern
-    within ``max_dist`` wins, ties to the lexicographically-smallest
-    template (templates arrive sorted)."""
-
-    def __init__(self, templates: list[str], params, with_params: bool):
-        super().__init__(templates, with_params)
-        from logparser_spark.logmine import LogMineParams
-
-        self.params = params or LogMineParams()
-        self.tpl_tokens = [
-            (t.split(" ") if t else [""], t) for t in templates
-        ]
-
-    def match_unique(self, uniques: np.ndarray) -> list[tuple[str, str, bool]]:
-        from logparser_spark.logmine import logmine_dist
-
-        out = []
-        for u in uniques:
-            toks = u.split() or [""]
-            best, best_d = None, None
-            for tpl_toks, tpl in self.tpl_tokens:
-                d = logmine_dist(tpl_toks, toks)
-                if best_d is None or d < best_d:
-                    best, best_d = tpl, d
-            if best is not None and best_d <= self.params.max_dist:
-                out.append((best, event_id_of(best), True))
-            else:
-                out.append((u, event_id_of(u), u in self.template_set))
-        return out
+    return _ScanMatcher(templates, best, with_params)
 
 
 class _IPLoMMatcher(_BaseMatcher):
@@ -395,6 +363,11 @@ class _IPLoMMatcher(_BaseMatcher):
         return results  # type: ignore[return-value]
 
 
+def _constant_matcher(templates: list[str], params, with_params: bool) -> _IPLoMMatcher:
+    """IPLoM, AEL, LKE and MoLFI share the fixed-length wildcarded shape."""
+    return _IPLoMMatcher(templates, with_params)
+
+
 # worker-global cache: one matcher per (templates identity, params) per worker
 _MATCHER_CACHE: dict[tuple, _BaseMatcher] = {}
 
@@ -431,7 +404,6 @@ def assign_templates(
     params: DrainParams | None = None,
     with_params: bool = True,
     strategy: str = "drain",
-    tau: float = 0.5,
     strategy_params=None,
 ) -> DataFrame:
     """Attach ``masked, template, event_id, parameters, matched`` columns.
@@ -439,12 +411,14 @@ def assign_templates(
     Implemented as a scalar Arrow pandas_udf over (masked, text) returning
     a struct — passthrough columns never cross the JVM↔Python boundary,
     so Arrow traffic is just the two string columns in and the assignment
-    struct out. ``strategy`` selects the matching engine: ``drain``
-    (fixed-depth tree), ``spell`` (LCS), ``lenma`` (length-vector
-    cosine), or ``iplom``/``ael`` (constant-position compatibility,
-    most-specific wins).
+    struct out. ``strategy`` names the engine of
+    :data:`~logparser_spark.operators.engines.ENGINES` whose matcher runs;
+    ``strategy_params`` are its params (Drain uses ``params``).
     """
+    eng = engine(strategy)
     params = params or DrainParams()
+    sp = eng.params_for(strategy_params, params)
+    make_matcher = eng.matcher
     if "masked" not in df.columns:
         df = with_masked(df, params)
     templates = sorted(c.template for c in clusters)
@@ -454,27 +428,12 @@ def assign_templates(
     bc = df.sparkSession.sparkContext.broadcast(templates)
     wp = with_params
 
-    sp = strategy_params
-
     @F.pandas_udf(T.StructType(ASSIGN_FIELDS[1:]))  # template..matched
     def assign_udf(masked: pd.Series, text: pd.Series) -> pd.DataFrame:
-        key = (token, strategy, tau, params, sp, wp)
+        key = (token, strategy, sp, wp)
         matcher = _MATCHER_CACHE.get(key)
         if matcher is None:
-            if strategy == "spell":
-                matcher = _SpellMatcher(bc.value, tau, wp)
-            elif strategy == "lenma":
-                matcher = _LenMaMatcher(bc.value, sp, wp)
-            elif strategy == "logmine":
-                matcher = _LogMineMatcher(bc.value, sp, wp)
-            elif strategy == "shiso":
-                matcher = _ShisoMatcher(bc.value, sp, wp)
-            elif strategy == "logsig":
-                matcher = _LogSigMatcher(bc.value, wp)
-            elif strategy in ("iplom", "ael", "lke", "molfi"):
-                matcher = _IPLoMMatcher(bc.value, wp)
-            else:
-                matcher = _Matcher(bc.value, params, wp)
+            matcher = make_matcher(bc.value, sp, wp)
             if len(_MATCHER_CACHE) > 8:
                 _MATCHER_CACHE.clear()
             _MATCHER_CACHE[key] = matcher

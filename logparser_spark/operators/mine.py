@@ -7,12 +7,15 @@ on one node, so the graft splits it:
 1. **mask** — native ``regexp_replace`` chain (no Python).
 2. **partition-local mine** — each partition (conversations co-located by
    ``conv_id`` hash, rows sorted by ``(conv_id, turn_idx)`` for
-   determinism) runs the sequential Drain kernel over its Arrow batches
-   inside ``mapInPandas`` and emits only its tiny template set.
+   determinism) runs the engine's sequential kernel (Drain by default)
+   over its Arrow batches inside ``mapInPandas`` and emits only its tiny
+   template set.
 3. **driver merge** — template sets are KBs; they are merged into one
    global set by canonical-order re-insertion into a fresh tree
    (:func:`logparser_spark.drain.merge_template_sets`), which makes the
-   result independent of partition enumeration order.
+   result independent of partition enumeration order.  Batch engines ship
+   deduped texts instead and fit once here (see
+   :mod:`~logparser_spark.operators.engines`).
 
 Per-row Python exists only *inside* the mining batch operator where the
 algorithm is inherently sequential, and is bounded: identical masked texts
@@ -30,15 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logparser_spark.config import DrainParams, PipelineConfig
-from logparser_spark.drain import Cluster, DrainTree, merge_template_sets
 from logparser_spark.functions.hashing import bucket_expr
 from logparser_spark.functions.masking import mask_expr
-
-#: strategies whose fit is a pure function of the weighted unique-text
-#: set — their mine ships per-partition unique TEXTS to the driver, so
-#: the driver-side volume is bounded by the corpus' unique-masked-text
-#: cardinality and must be guarded (see ``unique_cap``).
-BATCH_STRATEGIES = ("iplom", "ael", "logmine", "lke", "logsig", "molfi")
+from logparser_spark.operators.engines import engine
 
 
 def with_masked(df: DataFrame, params: DrainParams) -> DataFrame:
@@ -46,8 +43,7 @@ def with_masked(df: DataFrame, params: DrainParams) -> DataFrame:
     return df.withColumn("masked", mask_expr("text", params.rex))
 
 
-def _mine_partition(params: DrainParams, strategy: str = "drain", tau: float = 0.5,
-                    strategy_params=None):
+def _mine_partition(kernel, params):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -64,34 +60,16 @@ def _mine_partition(params: DrainParams, strategy: str = "drain", tau: float = 0
                 else:
                     seen[text] = int(cnt)
                     order.append(text)
-        if strategy in BATCH_STRATEGIES:
-            # batch algorithms are pure functions of the weighted unique-
-            # text SET: emit the partition's deduped texts and let the
-            # driver run the one global fit over the union — distributed
-            # output is then EXACTLY the sequential fit, not a
-            # merge-of-fits approximation (AEL's (len, n_wildcard)
-            # binning isn't even closed under re-fitting templates).
+        if kernel is None:
+            # batch engine: emit the partition's deduped texts and let
+            # the driver merge run the one global fit over the union.
             # Collected volume is unique masked texts (KBs–MBs: masking
-            # collapses parameters), and the scale path mines on a
-            # sample_one_in subset anyway.
+            # collapses parameters), guarded by ``unique_cap``.
             yield pd.DataFrame(
                 {"template": list(seen.keys()), "count": list(seen.values())}
             )
             return
-        if strategy == "spell":
-            from logparser_spark.spell import SpellMap, SpellParams
-
-            tree = SpellMap(SpellParams(tau))
-        elif strategy == "lenma":
-            from logparser_spark.lenma import LenMaMap
-
-            tree = LenMaMap(strategy_params)
-        elif strategy == "shiso":
-            from logparser_spark.shiso import ShisoTree
-
-            tree = ShisoTree(strategy_params)
-        else:
-            tree = DrainTree(params)
+        tree = kernel(params)
         for text in order:
             cluster = tree.add_message(text.split())
             cluster.count += seen[text] - 1
@@ -110,15 +88,16 @@ def mine_templates(
     cfg: PipelineConfig | None = None,
     sample_one_in: int = 1,
     strategy: str = "drain",
-    tau: float = 0.5,
     partition_col: str = "conv_id",
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     strategy_params=None,
     unique_cap: int | None = 500_000,
-    cap_action: str = "error",
 ) -> list:
     """Mine the global template set from a (already masked or raw) frame.
 
+    ``strategy`` names an engine of
+    :data:`~logparser_spark.operators.engines.ENGINES`; ``strategy_params``
+    are its params (defaults when ``None``; Drain uses ``cfg.drain``).
     ``sample_one_in > 1`` mines on a deterministic md5-bucket sample of
     ``partition_col`` groups (whole groups, so per-group ordering is
     preserved) — the scale path for 100 TB inputs where the template
@@ -126,66 +105,35 @@ def mine_templates(
     ``order_cols`` default to the transcripts keys; log-file inputs use
     ``("LineId",)``.
 
-    ``unique_cap`` guards the ``BATCH_STRATEGIES`` driver fit: those
-    kernels collect the corpus' weighted unique masked TEXTS, which is
-    KB–MB sized when masking collapses parameters but unbounded when
-    masking *misses* (high-cardinality alphabetic ids, say).  Before
-    collecting, the unique-text cardinality is estimated distributively
-    (``approx_count_distinct``, one cheap pre-pass) and when it exceeds
-    the cap the mine either fails loudly (``cap_action='error'``, the
-    default — silently OOMing the driver is never acceptable) or
-    auto-escalates ``sample_one_in`` proportionally
-    (``cap_action='sample'``) and mines the reduced sample.  ``None``
-    disables the guard.  Online kernels (drain/spell/lenma/shiso) need
-    no guard — they collect per-partition *template sets*, which their
-    trees compress regardless of input cardinality.
+    ``unique_cap`` guards the batch engines' driver fit: they collect the
+    corpus' weighted unique masked TEXTS, which is KB–MB sized when
+    masking collapses parameters but unbounded when masking *misses*
+    (high-cardinality alphabetic ids, say).  Before collecting, the
+    unique-text cardinality is estimated distributively
+    (``approx_count_distinct``, one cheap pre-pass) and the mine fails
+    loudly above the cap — silently OOMing the driver is never
+    acceptable.  ``None`` disables the guard.  Online engines need no
+    guard — they collect per-partition *template sets*, which their
+    kernels compress regardless of input cardinality.
     """
+    eng = engine(strategy)
     cfg = cfg or PipelineConfig()
     params = cfg.drain
+    sp = eng.params_for(strategy_params, params)
     if "masked" not in df.columns:
         df = with_masked(df, params)
     src = df
     if sample_one_in > 1:
         src = src.filter(bucket_expr(partition_col, sample_one_in) == 0)
-    if strategy in BATCH_STRATEGIES and unique_cap is not None:
-        # cap_action='sample' RE-VERIFIES after each escalation: the
-        # filter drops whole partition_col groups, and when unique-text
-        # cardinality is not proportional to group count (one giant
-        # group holding most of the distinct texts) a single
-        # proportional escalation can land above the cap — which would
-        # defeat the guard and collect the over-cap set anyway.  Bounded
-        # escalation attempts, then loud failure.
-        import math
-
-        for attempt in range(3 if cap_action == "sample" else 1):
-            est = src.agg(
-                F.approx_count_distinct("masked", 0.02).alias("n")
-            ).first()["n"]
-            if est <= unique_cap:
-                break
-            if cap_action == "sample" and attempt < 2:
-                factor = max(math.ceil(est / unique_cap), 2)
-                sample_one_in *= factor
-                src = src.filter(bucket_expr(partition_col, sample_one_in) == 0)
-                continue
+    if eng.kernel is None and unique_cap is not None:
+        est = src.agg(F.approx_count_distinct("masked", 0.02).alias("n")).first()["n"]
+        if est > unique_cap:
             raise ValueError(
                 f"mine_templates[{strategy}]: ~{est:,} unique masked texts "
-                f"exceed unique_cap={unique_cap:,} — the batch-kernel "
-                "driver fit would collect them all"
-                + (
-                    f" (still over cap after escalating the sample to "
-                    f"one-in-{sample_one_in})"
-                    if cap_action == "sample"
-                    else ""
-                )
-                + ". Masking likely misses this corpus' parameters: "
-                "extend rex or raise sample_one_in"
-                + (
-                    ""
-                    if cap_action == "sample"
-                    else ", or pass cap_action='sample' to auto-escalate"
-                )
-                + " (unique_cap=None to override)."
+                f"exceed unique_cap={unique_cap:,} — the batch-engine "
+                "driver fit would collect them all. Masking likely misses "
+                "this corpus' parameters: extend rex or raise sample_one_in "
+                "(unique_cap=None to override)."
             )
     cols = list(dict.fromkeys([*order_cols, "masked"]))
     # Skew guard: partitioning by conv alone puts a dominant conversation
@@ -205,44 +153,7 @@ def mine_templates(
         .sortWithinPartitions(*order_cols)
     )
     rows = part.mapInPandas(
-        _mine_partition(params, strategy, tau, strategy_params),
+        _mine_partition(eng.kernel, sp),
         "template string, count long",
     ).collect()
-    pairs = [[(r["template"], r["count"]) for r in rows]]
-    if strategy == "spell":
-        from logparser_spark.spell import SpellParams, merge_spell_sets
-
-        return merge_spell_sets(pairs, SpellParams(tau))
-    if strategy == "iplom":
-        from logparser_spark.iplom import merge_iplom_sets
-
-        return merge_iplom_sets(pairs, strategy_params)
-    if strategy == "ael":
-        from logparser_spark.ael import merge_ael_sets
-
-        return merge_ael_sets(pairs, strategy_params)
-    if strategy == "logmine":
-        from logparser_spark.logmine import merge_logmine_sets
-
-        return merge_logmine_sets(pairs, strategy_params)
-    if strategy == "lke":
-        from logparser_spark.lke import merge_lke_sets
-
-        return merge_lke_sets(pairs, strategy_params)
-    if strategy == "logsig":
-        from logparser_spark.logsig import merge_logsig_sets
-
-        return merge_logsig_sets(pairs, strategy_params)
-    if strategy == "molfi":
-        from logparser_spark.molfi import merge_molfi_sets
-
-        return merge_molfi_sets(pairs, strategy_params)
-    if strategy == "lenma":
-        from logparser_spark.lenma import merge_lenma_sets
-
-        return merge_lenma_sets(pairs, strategy_params)
-    if strategy == "shiso":
-        from logparser_spark.shiso import merge_shiso_sets
-
-        return merge_shiso_sets(pairs, strategy_params)
-    return merge_template_sets(pairs, params)
+    return eng.merge([[(r["template"], r["count"]) for r in rows]], sp)

@@ -41,6 +41,25 @@ from logparser_spark.functions.text import tokens_expr
 _BM25_SCALE = 1_000_000
 
 
+def _bm25_contrib(n_docs, avgdl, k1: float, b: float):
+    """Integer micro-score of one (term, doc) row from its ``df``, ``tf``
+    and ``dl`` columns, given the corpus ``n_docs`` and ``avgdl`` as double
+    columns.  Both :func:`bm25_scores` and :func:`bm25_topk_from_cells`
+    score through this one expression, which keeps the streaming
+    finalizer bit-exact with batch."""
+    idf = F.log(
+        F.lit(1.0)
+        + (n_docs - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    sat = (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
+    )
+    # floor(x·10^6 + 0.5): explicit half-up to integer micro-score —
+    # identical on both engines (Spark's double→bigint CAST truncates
+    # while DuckDB's rounds, so neither cast is used bare)
+    return F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
+
+
 def bm25_scores(
     docs: DataFrame,
     queries: DataFrame,
@@ -80,19 +99,9 @@ def bm25_scores(
         ).distinct()
     )
 
-    avgdl = total_tokens / n_docs
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
+    contrib = _bm25_contrib(
+        F.lit(float(n_docs)), F.lit(total_tokens / n_docs), k1, b
     )
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / F.lit(avgdl)))
-    )
-    # floor(x·10^6 + 0.5): explicit half-up to integer micro-score —
-    # identical on both engines (Spark's double→bigint CAST truncates
-    # while DuckDB's rounds, so neither cast is used bare)
-    contrib = F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
     q_term_set = q_terms.select("term").distinct()
     return (
         tf.join(F.broadcast(q_terms), "term")
@@ -142,13 +151,13 @@ def bm25_topk_from_cells(
     float): matched rows (doc, term, tf, dl) plus one sentinel stats
     row per (window, shard) holding that shard's (n_docs,
     total_tokens).  Everything derived is recomputed here with the SAME
-    JVM expressions as :func:`bm25_scores` — ``df`` per (window, term)
-    is the matched-row count (tf rows are one-per-doc, so counting them
-    IS the document frequency), window totals are exact BIGINT sums
-    over the shard sentinels, and ``avgdl``/``idf``/tf-saturation are
-    IEEE double ops on the same exact-integer inputs — so a finalized
-    window's top-k equals batch :func:`bm25_topk` over that window's
-    documents EXACTLY, not approximately (pinned by test).
+    JVM expression as :func:`bm25_scores` (``_bm25_contrib``) — ``df``
+    per (window, term) is the matched-row count (tf rows are one-per-doc,
+    so counting them IS the document frequency), window totals are exact
+    BIGINT sums over the shard sentinels, and ``avgdl``/``idf``/
+    tf-saturation are IEEE double ops on the same exact-integer inputs —
+    so a finalized window's top-k equals batch :func:`bm25_topk` over
+    that window's documents EXACTLY, not approximately (pinned by test).
     """
     from pyspark.sql import Window
 
@@ -166,18 +175,12 @@ def bm25_topk_from_cells(
     dft = matched.groupBy("win_start", "term").agg(
         F.count(F.lit(1)).alias("df")
     )
-    # expression shapes mirror bm25_scores exactly; integer inputs are
-    # exact doubles (< 2^53), so every intermediate double is identical
+    # integer inputs are exact doubles (< 2^53), so every intermediate
+    # double of the shared scoring expression is identical to batch's
     n_docs_d = F.col("n_docs").cast("double")
-    avgdl = F.col("total_tokens").cast("double") / n_docs_d
-    idf = F.log(
-        F.lit(1.0)
-        + (n_docs_d - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    contrib = _bm25_contrib(
+        n_docs_d, F.col("total_tokens").cast("double") / n_docs_d, k1, b
     )
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
-    )
-    contrib = F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
     scored = (
         matched.join(F.broadcast(q_terms), "term")
         .join(F.broadcast(dft), ["win_start", "term"])

@@ -9,7 +9,7 @@ Layout under the pipeline output root::
 
     <out>/routed/ckpt_bucket=N/sink_id=S/*.parquet   (dynamic overwrite)
     <out>/_manifest/*.parquet                        (append-only ledger)
-    <out>/_templates.json                            (frozen template set)
+    <out>/_templates.json                            (frozen template set + engine)
 
 A bucket is *committed* iff a manifest row exists for it.  The routed
 write uses dynamic partition overwrite, so a bucket that was half-written
@@ -21,7 +21,8 @@ Iceberg snapshot tag — same protocol, different carrier.)
 The template set is frozen at first successful mine (atomic
 write-then-rename) and *reused* on resume: otherwise a resumed run could
 mine a slightly different template set and route the remaining buckets
-inconsistently.
+inconsistently.  The engine that mined it is frozen with it, and a resume
+under another engine fails instead of matching with a different matcher.
 """
 
 from __future__ import annotations
@@ -86,27 +87,43 @@ def write_manifest_rows(metrics: DataFrame, out_dir: str) -> None:
     metrics.coalesce(1).write.mode("append").parquet(_manifest_dir(out_dir))
 
 
-def save_templates(clusters: list[Cluster], out_dir: str) -> str:
-    """Atomically freeze the mined template set (idempotent)."""
+def save_templates(clusters: list[Cluster], out_dir: str, strategy: str) -> str:
+    """Atomically freeze the mined template set and the engine that mined
+    it (idempotent)."""
     path = os.path.join(out_dir, "_templates.json")
     if os.path.exists(path):
         return path
     os.makedirs(out_dir, exist_ok=True)
-    payload = sorted(
+    templates = sorted(
         ({"template": c.template, "count": c.count} for c in clusters),
         key=lambda d: d["template"],
     )
     fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
     with os.fdopen(fd, "w") as f:
-        json.dump(payload, f)
+        json.dump({"strategy": strategy, "templates": templates}, f)
     os.replace(tmp, path)
     return path
 
 
-def load_templates(out_dir: str) -> list[Cluster] | None:
+def _frozen(out_dir: str) -> dict | None:
     path = os.path.join(out_dir, "_templates.json")
     if not os.path.exists(path):
         return None
     with open(path) as f:
-        payload = json.load(f)
-    return [Cluster(tokens=d["template"].split(" "), count=d["count"]) for d in payload]
+        return json.load(f)
+
+
+def load_templates(out_dir: str) -> list[Cluster] | None:
+    frozen = _frozen(out_dir)
+    if frozen is None:
+        return None
+    return [
+        Cluster(tokens=d["template"].split(" "), count=d["count"])
+        for d in frozen["templates"]
+    ]
+
+
+def template_strategy(out_dir: str) -> str | None:
+    """The engine that mined the frozen template set, if one is frozen."""
+    frozen = _frozen(out_dir)
+    return None if frozen is None else frozen["strategy"]

@@ -64,9 +64,9 @@ def run_pipeline(
 ) -> PipelineResult:
     """Run (or resume) the full pipeline into ``out_dir``.
 
-    ``strategy`` selects the mining/matching engine (drain, spell,
-    iplom, lenma, ael, logmine, shiso, lke); the frozen-template contract and resume
-    protocol are engine-independent (templates are plain strings).
+    ``strategy`` names the mining/matching engine (see
+    :data:`~logparser_spark.operators.engines.ENGINES`).  It is frozen with
+    the template set; resuming an output dir under another engine raises.
     ``fail_after_buckets`` is a test hook: commit only the first k buckets'
     manifests then raise, simulating a mid-run death *after* partial
     output landed (SURVEY §5.2 resume test).
@@ -88,6 +88,12 @@ def run_pipeline(
         lkp_tool = lkp_tool_df(spark)
 
     # -- resume bookkeeping -------------------------------------------------
+    frozen = M.template_strategy(out_dir)
+    if frozen not in (None, strategy):
+        raise ValueError(
+            f"{out_dir} holds templates mined by {frozen!r}; resuming it with "
+            f"strategy={strategy!r} would match them with another engine"
+        )
     committed = M.committed_buckets(spark, out_dir)
     all_buckets = set(range(cfg.checkpoint_buckets))
     todo = sorted(all_buckets - committed)
@@ -110,7 +116,7 @@ def run_pipeline(
         clusters = mine_templates(
             transcripts, cfg, sample_one_in=mine_sample_one_in, strategy=strategy
         )
-        M.save_templates(clusters, out_dir)
+        M.save_templates(clusters, out_dir, strategy)
         clusters = M.load_templates(out_dir)  # canonical (sorted) form
     result.n_templates = len(clusters)
 

@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from logparser_spark.config import WILDCARD
 
 
-@dataclass
+@dataclass(frozen=True)
 class SpellParams:
     tau: float = 0.5
 

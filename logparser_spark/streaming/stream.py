@@ -35,10 +35,17 @@ def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
 
 
 def streaming_assign(
-    stream: DataFrame, clusters: list[Cluster], cfg: PipelineConfig | None = None
+    stream: DataFrame,
+    clusters: list[Cluster],
+    cfg: PipelineConfig | None = None,
+    strategy: str = "drain",
 ) -> DataFrame:
+    """Match with ``strategy``'s matcher — the engine that mined
+    ``clusters`` — and attach ``sink_id``."""
     cfg = cfg or PipelineConfig()
-    assigned = assign_templates(stream, clusters, cfg.drain, with_params=False)
+    assigned = assign_templates(
+        stream, clusters, cfg.drain, with_params=False, strategy=strategy
+    )
     return with_sink_id(assigned, cfg)
 
 
@@ -637,7 +644,11 @@ def streaming_incremental_dedup_write(
                 .filter(F.col("batch_id") < F.lit(batch_id))
                 .select(id_col, text_col)
             )
-        except AnalysisException:  # first epoch: corpus dir not yet created
+        except AnalysisException as e:
+            # only a missing corpus is an empty one: no dir yet, or a
+            # first epoch torn before its commit (only ``_temporary``)
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             corpus = spark.createDataFrame([], new.schema)
         admitted = incremental_dedup(
             new, corpus, id_col=id_col, text_col=text_col, **dedup_kw

@@ -443,6 +443,41 @@ def test_streaming_route_write_matches_batch_and_resumes(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_streaming_assign_uses_the_mining_engine(spark, tmp_path):
+    """A LenMa-mined template set streams through LenMa's matcher: the
+    streaming assignment equals batch ``assign_templates`` row for row
+    (a Drain tree sends about a tenth of these rows to the dead sink)."""
+    from logparser_spark.operators.assign import assign_templates
+    from logparser_spark.streaming.stream import streaming_assign
+
+    cfg = PipelineConfig(num_partitions=4)
+    tdf = transcripts_df(spark, 2000, 30, 20)
+    clusters = mine_templates(tdf, cfg, strategy="lenma")
+    in_path, out_path = str(tmp_path / "in"), str(tmp_path / "out")
+    tdf.write.parquet(in_path)
+
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(in_path)
+    q = (
+        streaming_assign(stream, clusters, cfg, strategy="lenma")
+        .writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    cols = ["conv_id", "turn_idx", "template", "event_id", "matched"]
+    batch = assign_templates(
+        spark.read.parquet(in_path), clusters, cfg.drain, with_params=False,
+        strategy="lenma",
+    )
+    got = spark.read.parquet(out_path).select(*cols)
+    assert got.count() == 2000
+    assert got.exceptAll(batch.select(*cols)).count() == 0
+    assert batch.select(*cols).exceptAll(got).count() == 0
+
+
 def test_streaming_cms_cells_equal_batch_sketch(spark):
     """A finalized window's streaming CMS cells == the batch sketch over
     that window's rows (cell-wise mergeability across micro-batches)."""
@@ -768,6 +803,38 @@ def test_streaming_bm25_cells_equal_batch_topk(spark):
         assert spark.read.parquet(out_path).count() == n
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_streaming_dedup_admission_fails_on_unreadable_corpus(spark, tmp_path):
+    """Only a missing corpus reads as empty.  A corpus that exists but
+    cannot be read (here a seeded partition without the text column)
+    fails the query instead of admitting every duplicate; a well-seeded
+    corpus rejects all six exact duplicates."""
+    from pyspark.errors import StreamingQueryException
+
+    from logparser_spark.streaming.stream import streaming_incremental_dedup_write
+
+    texts = [
+        f"seeded document number {w} about adaptive shuffle partitions"
+        for w in ("one", "two", "three", "four", "five", "six")
+    ]
+    schema = "doc_id bigint, text string"
+    in_path = str(tmp_path / "in")
+    spark.createDataFrame(list(enumerate(texts)), schema).coalesce(1).write.parquet(in_path)
+
+    def admit(seed: str, seed_schema: str) -> list:
+        out = str(tmp_path / seed)
+        seeded = [(100 + i, t) for i, t in enumerate(texts)]
+        spark.createDataFrame(seeded, seed_schema).write.parquet(f"{out}/batch_id=-1")
+        q = streaming_incremental_dedup_write(
+            spark.readStream.schema(schema).parquet(in_path), out, threshold=0.9
+        )
+        q.awaitTermination(180)
+        return spark.read.parquet(out).filter(F.col("batch_id") == 0).collect()
+
+    with pytest.raises(StreamingQueryException, match="UNRESOLVED_COLUMN"):
+        admit("bad", "doc_id bigint, body string")
+    assert admit("good", schema) == []
 
 
 def test_streaming_incremental_dedup_grows_canonical_corpus(spark):

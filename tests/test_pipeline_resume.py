@@ -74,6 +74,20 @@ def test_kill_and_resume_is_exact(spark, tdf):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_resume_under_another_engine_fails(spark, tdf, tmp_path):
+    """The frozen template set records its engine: a killed LenMa run
+    resumed with Drain raises instead of matching LenMa templates with a
+    Drain tree; resumed with LenMa it completes."""
+    out = str(tmp_path)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, tdf, out, CFG, fail_after_buckets=3, strategy="lenma")
+    with pytest.raises(ValueError, match="'lenma'.*strategy='drain'"):
+        run_pipeline(spark, tdf, out, CFG, strategy="drain")
+    r = run_pipeline(spark, tdf, out, CFG, strategy="lenma")
+    assert len(r.buckets_done) == 5
+    assert len(_routed_rows(spark, out)) == N
+
+
 def test_manifest_lineage_and_metrics(spark, tdf):
     out = tempfile.mkdtemp(prefix="pipe_manifest_")
     try:
